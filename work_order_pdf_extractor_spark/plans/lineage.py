@@ -11,14 +11,21 @@ Here the same guarantee is data-engineering-grade:
 - one Spark job processes ALL incomplete buckets (no per-bucket job loop —
   at 1000 executors a bucket-at-a-time driver loop would serialize the
   cluster), writing ``partitionBy("bucket")`` into a temp dir;
+- per-bucket stats come from ONE distributed aggregate over the files just
+  written, read with the result's own schema (no footer job) and listed on
+  the driver (the session's partition-discovery threshold keeps a
+  ``bucket=`` listing out of a Spark job);
 - each bucket directory is then atomically renamed into the final layout
   and a lineage row ``(bucket, rows_in, rows_out, n_failed,
   input_fingerprint, run_id)`` is appended — rename BEFORE lineage, so a
   crash between the two leaves a visible-but-unrecorded bucket that resume
   repairs WITHOUT reprocessing;
-- resume = anti-join of buckets against the lineage table: completed
-  buckets are never re-read (their input rows are filtered out before the
-  expensive UDF runs).
+- resume reads the lineage rows on the driver (the driver wrote them, one
+  small JSON line per bucket — no Spark job) and filters completed buckets
+  out of the input before the expensive UDF runs.
+
+:func:`commit_buckets` is that write → stats → rename → lineage protocol,
+shared with ``plans.ingest``.
 """
 
 from __future__ import annotations
@@ -59,12 +66,16 @@ def read_lineage(spark: SparkSession, out_dir: str) -> DataFrame | None:
 
 
 def completed_buckets(spark: SparkSession, out_dir: str) -> set[int]:
-    lin = read_lineage(spark, out_dir)
-    recorded = (
-        {int(r["bucket"]) for r in lin.select("bucket").distinct().collect()}
-        if lin is not None
-        else set()
-    )
+    """Bucket ids with a lineage row or a committed ``bucket=`` dir. Runs
+    on the driver only: a ``.json.tmp`` left by a crash mid-append is not
+    a lineage row."""
+    recorded: set[int] = set()
+    ld = _lineage_dir(out_dir)
+    if os.path.isdir(ld):
+        for name in os.listdir(ld):
+            if name.endswith(".json"):
+                with open(os.path.join(ld, name)) as f:
+                    recorded.update(int(json.loads(ln)["bucket"]) for ln in f if ln.strip())
     # repair pass: bucket dirs that were renamed into place but whose
     # lineage append was lost in a crash count as complete too
     dd = _data_dir(out_dir)
@@ -85,6 +96,56 @@ def _append_lineage_row(out_dir: str, row: dict) -> None:
     os.replace(tmp, path)  # atomic on POSIX
 
 
+def commit_buckets(
+    spark: SparkSession,
+    result: DataFrame,
+    out_dir: str,
+    run_id: str | None,
+    done: set[int],
+    stats: dict[str, F.Column],
+) -> dict:
+    """Commit ``result`` (which carries an int ``bucket`` column) bucket by
+    bucket: write it ``partitionBy("bucket")`` into a temp dir, compute
+    the ``stats`` aggregates (lineage field → integer aggregate) per
+    bucket in one job over the written files, then rename each new
+    bucket dir into place and append its lineage row ``{"bucket",
+    **stats, "run_id"}``. ``done`` is the set of buckets resume skipped.
+    Returns the run summary."""
+    run_id = run_id or uuid.uuid4().hex[:12]
+    tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
+    result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
+    names = sorted(n for n in os.listdir(tmp_dir) if n.startswith("bucket="))
+    # the result's own schema means no footer job; the driver lists the
+    # bucket dirs (session partition-discovery threshold)
+    rows = (
+        spark.read.schema(result.schema).parquet(tmp_dir)
+        .groupBy("bucket")
+        .agg(*(agg.alias(k) for k, agg in stats.items()))
+        .collect()
+    ) if names else []
+    stats_by_bucket = {int(r["bucket"]): r for r in rows}
+
+    dd = _data_dir(out_dir)
+    os.makedirs(dd, exist_ok=True)
+    done_now = 0
+    for name in names:
+        b = int(name.split("=", 1)[1])
+        final = os.path.join(dd, name)
+        if os.path.exists(final):  # already committed by a racing/prior run
+            continue
+        os.replace(os.path.join(tmp_dir, name), final)  # atomic rename first
+        fields = {k: int(stats_by_bucket[b][k]) for k in stats}
+        _append_lineage_row(out_dir, {"bucket": b, **fields, "run_id": run_id})
+        done_now += 1
+    shutil.rmtree(tmp_dir, ignore_errors=True)
+    return {
+        "run_id": run_id,
+        "buckets_total": len(completed_buckets(spark, out_dir)),
+        "buckets_skipped": len(done),
+        "buckets_done": done_now,
+    }
+
+
 def run_with_checkpoint(
     spark: SparkSession,
     transcripts: DataFrame,
@@ -95,21 +156,11 @@ def run_with_checkpoint(
     run_id: str | None = None,
 ) -> dict:
     """Process all not-yet-committed buckets; returns a summary dict
-    ``{"run_id", "buckets_total", "buckets_skipped", "buckets_done",
-    "rows_out"}``. Safe to re-invoke after any crash; a fully committed
-    output is a no-op rerun (idempotency property test in the suite)."""
-    run_id = run_id or uuid.uuid4().hex[:12]
-    os.makedirs(out_dir, exist_ok=True)
+    ``{"run_id", "buckets_total", "buckets_skipped", "buckets_done"}``.
+    Safe to re-invoke after any crash; a fully committed output is a
+    no-op rerun (idempotency property test in the suite)."""
     done = completed_buckets(spark, out_dir)
-
-    withb = transcripts.withColumn("bucket", bucket_col(n_buckets))
-    todo = withb
-    if done:
-        # lineage anti-join (tiny build side: bucket ids)
-        done_df = spark.createDataFrame(
-            [(int(b),) for b in sorted(done)], "bucket int"
-        )
-        todo = withb.join(F.broadcast(done_df), "bucket", "left_anti")
+    todo = transcripts.filter(~bucket_col(n_buckets).isin(sorted(done))) if done else transcripts
 
     # one job for every remaining bucket; salting happens inside run_pipeline
     result = run_pipeline(
@@ -118,62 +169,19 @@ def run_with_checkpoint(
         # order-insensitive per-bucket input fingerprint (input-snapshot id)
         "row_fp", F.xxhash64("conv_id", "turn_idx")
     )
-
-    tmp_dir = os.path.join(out_dir, f"_tmp-{run_id}")
-    (
-        result.write.mode("overwrite").partitionBy("bucket").parquet(tmp_dir)
+    return commit_buckets(
+        spark,
+        result,
+        out_dir,
+        run_id,
+        done,
+        {
+            "rows_in": F.count("*"),
+            "rows_out": F.count("*"),
+            "n_failed": F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)),
+            "input_fingerprint": F.expr("bit_xor(row_fp)"),
+        },
     )
-
-    wrote_any = os.path.isdir(tmp_dir) and any(
-        n.startswith("bucket=") for n in os.listdir(tmp_dir)
-    )
-    # per-bucket stats for lineage (cheap scan of the just-written parquet)
-    stats = [] if not wrote_any else (
-        spark.read.parquet(tmp_dir)
-        .groupBy("bucket")
-        .agg(
-            F.count("*").alias("rows_out"),
-            F.sum(F.when(F.col("status") != "ok", 1).otherwise(0)).alias("n_failed"),
-            F.expr("bit_xor(row_fp)").alias("input_fingerprint"),
-        )
-        .collect()
-    )
-    stats_by_bucket = {int(r["bucket"]): r for r in stats}
-
-    dd = _data_dir(out_dir)
-    os.makedirs(dd, exist_ok=True)
-    done_now = 0
-    for name in sorted(os.listdir(tmp_dir)):
-        if not name.startswith("bucket="):
-            continue
-        b = int(name.split("=", 1)[1])
-        final = os.path.join(dd, name)
-        if os.path.exists(final):  # already committed by a racing/prior run
-            continue
-        os.replace(os.path.join(tmp_dir, name), final)  # atomic rename first
-        s = stats_by_bucket.get(b)
-        _append_lineage_row(
-            out_dir,
-            {
-                "bucket": b,
-                "rows_in": int(s["rows_out"]) if s else 0,
-                "rows_out": int(s["rows_out"]) if s else 0,
-                "n_failed": int(s["n_failed"]) if s else 0,
-                "input_fingerprint": int(s["input_fingerprint"]) if s else 0,
-                "run_id": run_id,
-            },
-        )
-        done_now += 1
-    shutil.rmtree(tmp_dir, ignore_errors=True)
-
-    # repair: record lineage for dirs present without rows (crash window)
-    lin_after = completed_buckets(spark, out_dir)
-    return {
-        "run_id": run_id,
-        "buckets_total": len(lin_after),
-        "buckets_skipped": len(done),
-        "buckets_done": done_now,
-    }
 
 
 def read_output(spark: SparkSession, out_dir: str) -> DataFrame:

@@ -53,6 +53,10 @@ def get_spark(
         .config("spark.python.worker.idleTimeoutSeconds", "0")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
+        # list up to 1024 partition dirs on the driver: above the default
+        # threshold (32) Spark starts a one-task-per-dir listing job, which
+        # costs more than it saves on a lineage commit's 64 bucket= dirs
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "1024")
         # local inputs are small; without a floor Spark would pack the whole
         # scan into a couple of tasks and starve the Python workers. On a
         # real cluster file count ≫ cores and this config is a no-op.
