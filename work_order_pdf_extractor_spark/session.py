@@ -46,6 +46,13 @@ def get_spark(
         # (10k rows × ~2 KB payload ≈ 20 MB in flight per worker)
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        # a fixed young generation of a quarter of the driver heap. G1's
+        # adaptive sizing grows eden to over half the heap on this driver's
+        # short-lived garbage, and the driver's resident size was however
+        # much of that eden a run had filled: identical runs differed by
+        # ~0.5 GB. At a fixed size eden fills many times a run, and the
+        # resident size is young gen + live set every time.
+        .config("spark.driver.defaultJavaOptions", "-XX:NewRatio=3")
         # keep the Python worker pool stable: forks are expensive and
         # serialized in this sandbox (~0.7 s each), so never reap idle
         # workers between jobs
